@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from heavydb_spark import catalog, dialect
 from heavydb_spark.dialect import _scan_balanced
-from heavydb_spark.functions import register_all
+from heavydb_spark.functions import groups_to_register, register_all
 from heavydb_spark.session import apply_runtime_conf, get_spark
 
 # DML statement shapes (DBHandler.cpp:6626 sql_execute_impl dispatches
@@ -1235,7 +1235,6 @@ _WRAPPER_FORMATS = {
 class Engine:
     def __init__(self, spark: SparkSession):
         self.spark = apply_runtime_conf(spark)
-        register_all(self.spark)
         self._servers: dict[str, tuple[str, dict]] = {
             k: (w, dict(o)) for (k, (w, o)) in _DEFAULT_SERVERS.items()
         }
@@ -1741,7 +1740,7 @@ class Engine:
             query = dialect._rewrite_call(
                 query, "APPROX_MEDIAN",
                 lambda args: f"APPROX_PERCENTILE({args}, 0.5)")
-        rewritten = dialect.rewrite(query, type_of=self._type_resolver(query))
+        rewritten = self._rewrite(query, type_of=self._type_resolver(query))
         if self.result_cache and not hints \
                 and self._is_read_only_statement(query) \
                 and not _NONDETERMINISTIC_FN_RE.search(rewritten):
@@ -2363,6 +2362,18 @@ class Engine:
             head += f"({collist}) "
         return head + "VALUES " + ", ".join(out_rows)
 
+    def _rewrite(self, sql: str, type_of=None) -> str:
+        """dialect.rewrite, then register the SQL function groups the
+        rewritten text calls that this session has not registered yet —
+        every rewrite in the engine comes through here, so a function
+        group is paid for by the first statement that uses it, never by
+        Engine() (functions/__init__.py)."""
+        rewritten = dialect.rewrite(sql, type_of=type_of)
+        missing = groups_to_register(self.spark, rewritten)
+        if missing:
+            register_all(self.spark, groups=missing)
+        return rewritten
+
     def _type_resolver(self, context: str, force: bool = False):
         """Column-type callback for the dialect's reference-semantics
         int/int division rewrite (ArithmeticIR.cpp kDIVIDE): resolves a
@@ -2459,7 +2470,7 @@ class Engine:
                 stmt = f"WITH {prefix} SELECT * FROM {name}"
                 try:
                     sch = self.spark.sql(
-                        dialect.rewrite(stmt, type_of=type_of)
+                        self._rewrite(stmt, type_of=type_of)
                     ).schema
                 except Exception:
                     continue
@@ -2489,7 +2500,7 @@ class Engine:
                 )
                 try:
                     sch = self.spark.sql(
-                        dialect.rewrite(stmt, type_of=type_of)
+                        self._rewrite(stmt, type_of=type_of)
                     ).schema
                 except Exception:
                     continue
@@ -3029,7 +3040,7 @@ class Engine:
             sel = body[2:].strip()
             if sel.startswith("(") and sel.endswith(")"):
                 sel = sel[1:-1]
-            ctas_select = dialect.rewrite(
+            ctas_select = self._rewrite(
                 sel, type_of=self._type_resolver(sel)
             )
         else:
@@ -3107,7 +3118,7 @@ class Engine:
         tof = self._type_resolver(
             f"{table} {set_clause} {where or ''}", force=True)
         cond = (
-            F.expr(dialect.rewrite(where, type_of=tof))
+            F.expr(self._rewrite(where, type_of=tof))
             if where else F.lit(True)
         )
         # Each value stages into a temp column first (a correlated
@@ -3118,7 +3129,7 @@ class Engine:
         work = df
         assignments: dict[str, Column] = {}
         for i, (k, v) in enumerate(raw.items()):
-            rv = dialect.rewrite(v, type_of=tof)
+            rv = self._rewrite(v, type_of=tof)
             tmp = f"__dml_v{i}"
             work = work.withColumn(tmp, F.expr(rv))
             col = F.col(tmp)
@@ -3156,7 +3167,7 @@ class Engine:
 
         df = self.spark.table(table)
         cond = (
-            F.expr(dialect.rewrite(
+            F.expr(self._rewrite(
                 where,
                 type_of=self._type_resolver(f"{table} {where}"),
             ))
@@ -3289,7 +3300,7 @@ class Engine:
                         coerced = _coerce_default_literal(
                             "TIME" if is_time else styp,
                             f"DEFAULT {dflt}")
-                        base = F.expr(dialect.rewrite(
+                        base = F.expr(self._rewrite(
                             coerced[len("DEFAULT "):]))
                     else:
                         base = F.lit(None)
@@ -3857,7 +3868,9 @@ class Engine:
         (DdlCommandExecutor.cpp:1957): the engine's registered scalar
         SQL functions (ST_ surface, string/sketch pandas UDFs, dialect
         kernels). CPU true / GPU false — Spark executors are the only
-        device class here."""
+        device class here. Registers every function group first, so
+        the list does not depend on which statements ran before."""
+        register_all(self.spark)
         fns = sorted(
             r[0].split(".")[-1].lower()
             for r in self.spark.sql("SHOW USER FUNCTIONS").collect()
@@ -4004,7 +4017,7 @@ class Engine:
                 "statement through sql() instead"
             )
         df = self.spark.sql(
-            dialect.rewrite(
+            self._rewrite(
                 stripped, type_of=self._type_resolver(stripped)
             )
         )

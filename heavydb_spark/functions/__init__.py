@@ -4,47 +4,104 @@ Nearly all of the reference's string/datetime/math library maps 1:1 onto
 `pyspark.sql.functions` and stays JVM-side (whole-stage codegen). This
 package holds only the genuine gaps, each registered as a SQL function so
 both the DataFrame API and `engine.sql` can reach it.
+
+The SQL functions come in groups, one per module (strings, arrays, geos,
+geo, render, h3); each module declares the names it registers
+(`SQL_FUNCTIONS`) and the groups its SQL bodies call (`SQL_REQUIRES`).
+Registering a group costs up to several seconds, so nothing registers
+when an `Engine` is built: the engine registers a group, after the groups
+it requires, the first time a statement's rewritten text calls one of its
+functions, once per Spark session (`groups_to_register`). `SHOW
+FUNCTIONS` registers every group first. Code that sends SQL naming these
+functions to `spark.sql` itself calls `register_all(spark)` first; the
+Column helpers need no registration.
 """
 
 from __future__ import annotations
 
+import re
+import threading
+import weakref
+
 from pyspark.sql import SparkSession
 
-from heavydb_spark.functions.strings import register_string_functions
-from heavydb_spark.functions.arrays import register_array_functions
-from heavydb_spark.functions.geo import register_geo_functions
-from heavydb_spark.functions.geos import register_geos_functions
-from heavydb_spark.functions.render import register_render_functions
-from heavydb_spark.functions.h3 import register_h3_functions
+from heavydb_spark.functions import arrays, geo, geos, h3, render, strings
+
+# group -> (declaring module, register function)
+_GROUPS = {
+    "strings": (strings, strings.register_string_functions),
+    "arrays": (arrays, arrays.register_array_functions),
+    "geos": (geos, geos.register_geos_functions),
+    "geo": (geo, geo.register_geo_functions),
+    "render": (render, render.register_render_functions),
+    "h3": (h3, h3.register_h3_functions),
+}
+
+# SQL function name -> its group
+GROUP_OF = {
+    name: group
+    for group, (mod, _) in _GROUPS.items()
+    for name in mod.SQL_FUNCTIONS
+}
 
 
-# Registration is idempotent but NOT free: ~80 CREATE FUNCTION
-# statements + pandas-UDF registrations cost several seconds, and every
-# Engine() construction calls register_all — memoize per live session.
-# Weak-keyed so stopped sessions stay garbage-collectable (id() reuse
-# is a non-issue: the entry dies with the session).
-import weakref  # noqa: E402
-
-_REGISTERED: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
+def _closure(group: str) -> list[str]:
+    out: list[str] = []
+    for dep in getattr(_GROUPS[group][0], "SQL_REQUIRES", ()):
+        out += [g for g in _closure(dep) if g not in out]
+    return out + [group]
 
 
-def register_all(spark: SparkSession) -> None:
-    try:
-        if spark in _REGISTERED:
-            return
-    except TypeError:  # not weak-referenceable: register every time
-        pass
-    register_string_functions(spark)
-    register_array_functions(spark)
-    # geos first: geo's st_intersects SQL body calls st_intersection
-    register_geos_functions(spark)
-    register_geo_functions(spark)
-    register_render_functions(spark)
-    register_h3_functions(spark)
-    try:
-        _REGISTERED.add(spark)
-    except TypeError:
-        pass
+# group -> the groups to register for it, required groups first
+_CLOSURE = {group: _closure(group) for group in _GROUPS}
+
+# identifiers in call position; the names are looked up in GROUP_OF
+# (one generic pattern is ~7x cheaper per statement than an alternation
+# of every function name)
+_CALL_RE = re.compile(r"\b([A-Za-z_]\w*)\s*\(")
+
+# session -> the groups registered in it; each value is replaced, never
+# mutated, so the lock-free reads see a whole set. Weak-keyed so stopped
+# sessions stay garbage-collectable.
+_REGISTERED: "weakref.WeakKeyDictionary[SparkSession, frozenset[str]]" = (
+    weakref.WeakKeyDictionary()
+)
+_LOCK = threading.Lock()
+
+
+def registered_groups(spark: SparkSession) -> frozenset[str]:
+    return _REGISTERED.get(spark, frozenset())
+
+
+def groups_to_register(spark: SparkSession, sql: str) -> set[str]:
+    """The groups whose functions `sql` calls and that `spark` has not
+    registered yet (lock-free)."""
+    done = registered_groups(spark)
+    if len(done) == len(_GROUPS):
+        return set()
+    return {
+        GROUP_OF[name]
+        for name in map(str.lower, _CALL_RE.findall(sql))
+        if name in GROUP_OF
+    } - done
+
+
+def register_all(spark: SparkSession, groups=None) -> None:
+    """Register the SQL functions of `groups` (default: every group) in
+    `spark`, each after the groups it requires, once per session."""
+    wanted = list(dict.fromkeys(
+        g for group in (_GROUPS if groups is None else groups)
+        for g in _CLOSURE[group]
+    ))
+    if registered_groups(spark).issuperset(wanted):
+        return
+    with _LOCK:
+        for group in wanted:
+            done = registered_groups(spark)
+            if group in done:
+                continue
+            _GROUPS[group][1](spark)
+            _REGISTERED[spark] = done | {group}
 
 
 def single_value(col):

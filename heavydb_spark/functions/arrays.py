@@ -65,6 +65,9 @@ _SQL_FUNCS = {
 }
 
 
+SQL_FUNCTIONS = tuple(_SQL_FUNCS)
+
+
 def register_array_functions(spark: SparkSession) -> None:
     import logging
 

@@ -1368,7 +1368,7 @@ _GEO_SQL_FUNCS = {
     # above formula for formula (shoelace area with holes, area-weighted
     # centroid, even-odd ray cast, open-path length); st_intersects
     # delegates to the GEOS overlay kernel (functions/geos.py), so it
-    # must register AFTER register_geos_functions (register_all order).
+    # must register AFTER register_geos_functions (SQL_REQUIRES below).
     # SQL scalar functions cannot overload, so st_astext takes the
     # POINT struct (the polygon spelling stays on the Column API).
     "st_area": """
@@ -2060,6 +2060,14 @@ def st_aswkb_polygon(g: Column) -> Column:
     """WKB POLYGON (type 3); rings are closed on output as WKB
     requires."""
     return _wkb_udfs()[2](g)
+
+
+# The SQL names register_geo_functions creates, and the groups its SQL
+# bodies call (st_intersects -> geos' st_intersection), which must be
+# registered first.
+SQL_FUNCTIONS = (*_GEO_SQL_FUNCS, "st_asbinary", "st_aswkb",
+                 "st_asbinary_line", "st_asbinary_poly")
+SQL_REQUIRES = ("geos",)
 
 
 def register_geo_functions(spark) -> None:

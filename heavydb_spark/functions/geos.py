@@ -462,6 +462,11 @@ def st_buffer_polygon(
 # spark.udf.register keep the same Arrow-batched execution.
 
 
+SQL_FUNCTIONS = ("st_convexhull", "st_concavehull", "st_buffer_line",
+                 "st_buffer_poly", "st_buffer_any", "st_union",
+                 "st_intersection", "st_difference")
+
+
 def register_geos_functions(spark) -> None:
     @F.pandas_udf(POLYGON_T)
     def _hull(s: pd.Series) -> pd.Series:

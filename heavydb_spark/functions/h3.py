@@ -275,6 +275,11 @@ def h3_cell_to_boundary_wkt(cell) -> Column:
 # ------------------------------------------------- SQL registration
 
 
+SQL_FUNCTIONS = ("h3_lonlattocell", "h3_pointtocell", "h3_celltolon",
+                 "h3_celltolat", "h3_celltoparent", "h3_isvalidcell",
+                 "h3_celltostring", "h3_stringtocell")
+
+
 def register_h3_functions(spark) -> None:
     """Register the H3_* family as Spark SQL scalar functions so the
     reference's H3 SQL runs through `engine.sql` (all codegen). The

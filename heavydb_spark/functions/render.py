@@ -324,18 +324,21 @@ def _hex_bin(ops, orient, axis, valx, minx, maxx, valy, miny, maxy,
         )
         return hexsize * 1.5 * rz_y + yo
 
-    if orient == "horiz" and axis == "x":
-        return hexsize * SQRT3 * (rx_f + rz_f / 2.0) + xo
-    if orient == "horiz" and axis == "y":
-        return _y_horiz()
-    if orient == "horiz" and axis == "xy":
-        return (hexsize * SQRT3 * (rx_f + rz_f / 2.0) + xo, _y_horiz())
-    if orient == "vert" and axis == "x":
-        # only the first branch affects rx (ExtensionFunctions.hpp:894)
-        rx_v = ops.where(cond_x, -ry - rz, rx)
-        return hexsize * 1.5 * rx_v + xo
-    # vert / y: full 3-way rounding, output from rz and rx
-    return hexsize * SQRT3 * (rz_f + rx_f / 2.0) + yo
+    if orient == "horiz":
+        def _x():
+            return hexsize * SQRT3 * (rx_f + rz_f / 2.0) + xo
+        _y = _y_horiz
+    else:
+        def _x():
+            # only the first branch affects rx (ExtensionFunctions.hpp:894)
+            return hexsize * 1.5 * rx_f + xo
+
+        def _y():
+            # full 3-way rounding, output from rz and rx
+            return hexsize * SQRT3 * (rz_f + rx_f / 2.0) + yo
+    if axis == "xy":
+        return _x(), _y()
+    return _x() if axis == "x" else _y()
 
 
 def _haversine_m(ops, fromlon, fromlat, tolon, tolat):
@@ -680,6 +683,9 @@ _VIEW_NAME_ALIASES = {
     "convert_meters_to_pixel_width": "convert_meters_to_merc_pixel_width",
     "convert_meters_to_pixel_height": "convert_meters_to_merc_pixel_height",
 }
+
+
+SQL_FUNCTIONS = (*_RENDER_PARAM_SETS, *_VIEW_NAME_ALIASES)
 
 
 def register_render_functions(spark) -> None:

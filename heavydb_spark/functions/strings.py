@@ -152,6 +152,12 @@ def hash_heavy(s: pd.Series, seed: pd.Series) -> pd.Series:
     )
 
 
+# The SQL names register_string_functions creates (the registry in
+# functions/__init__.py maps each to this group).
+SQL_FUNCTIONS = ("jarowinkler_similarity", "url_encode", "url_decode",
+                 "hash_heavy", "initcap_heavy")
+
+
 def register_string_functions(spark: SparkSession) -> None:
     spark.udf.register(
         "jarowinkler_similarity", jarowinkler_similarity_ref

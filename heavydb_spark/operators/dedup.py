@@ -542,9 +542,9 @@ def remove_boilerplate_segments(
     rows per doc (a factor `seg` cheaper than the sliding-window
     ExactSubstr explode); segment frequency is one hash-shuffle
     groupBy on the segment text with a distinct-doc count; deletion is
-    a left-anti join of occurrences against the (typically tiny)
-    boilerplate set; reassembly is one shuffle of the SURVIVING
-    segment rows on the doc id — the shuffle adapts to the removal
+    a left-anti join of occurrences against the boilerplate set (AQE
+    broadcasts the set when it is small); reassembly is one shuffle of
+    the SURVIVING segment rows on the doc id — the shuffle adapts to the removal
     rate, which the set-rebuild alternative (see the in-body note)
     does not. No occurrence-pair join anywhere — a segment repeated k
     times costs O(k) rows, never O(k^2).
@@ -581,13 +581,11 @@ def remove_boilerplate_segments(
         .filter(F.col("n_docs") >= min_docs)
         .select("seg")
     )
-    # The boilerplate set is broadcast EXPLICITLY (r14, advice): the
-    # single-doc-exchange plan below is only right when the anti join
-    # builds on `boiler`, and min_docs does not bound the set's size,
-    # so the assumption is visible in the plan rather than left to the
-    # size estimator.  On a corpus where the boilerplate set outgrows
-    # executor memory, drop the hint and accept a seg-keyed exchange
-    # (documented fallback).
+    # No broadcast hint on `boiler`: min_docs does not bound the set's
+    # size, and a forced broadcast of a set that outgrows the driver
+    # fails the job.  AQE broadcasts it at runtime when its measured
+    # size is under spark.sql.autoBroadcastJoinThreshold (the usual,
+    # tiny case) and keeps a seg-keyed sort-merge anti join otherwise.
     #
     # r14 REVERT of the r13 pre-join doc repartition: the r13 verdict
     # flagged its perf standing as unverified, and the full
@@ -607,7 +605,7 @@ def remove_boilerplate_segments(
     # only the SURVIVING segment rows, which adapts to the removal
     # rate, while the set form ships the full packed corpus
     # regardless.  Kept the survivor-row form.)
-    kept = occ.join(F.broadcast(boiler), "seg", "left_anti")
+    kept = occ.join(boiler, "seg", "left_anti")
     # getField (codegen) instead of an interpreted transform lambda
     rebuilt = kept.groupBy("doc").agg(
         F.count(F.lit(1)).alias("n_kept"),

@@ -18,6 +18,46 @@ import os
 
 from pyspark.sql import SparkSession
 
+
+def _memory_limit_bytes(meminfo: str = "/proc/meminfo",
+                        cgroup_files: tuple[str, ...] = (
+                            "/sys/fs/cgroup/memory.max",
+                            "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+                        )) -> int | None:
+    """The smaller of the host's MemTotal and the cgroup memory limit
+    (v2 `memory.max`, v1 `memory.limit_in_bytes`); None if neither can
+    be read. Read-only."""
+    limits = []
+    try:
+        with open(meminfo) as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    limits.append(int(line.split()[1]) * 1024)
+                    break
+    except (OSError, ValueError, IndexError):
+        pass
+    for path in cgroup_files:
+        try:
+            with open(path) as fh:
+                value = fh.read().strip()
+        except OSError:
+            continue
+        if value.isdigit():  # "max" means no limit
+            limits.append(int(value))
+    return min(limits) if limits else None
+
+
+def default_driver_memory(limit_bytes: int | None) -> str:
+    """spark.driver.memory when SPARK_GRAFT_DRIVER_MEM is unset: half of
+    the memory limit, between 1g and 16g. The other half is headroom for
+    the JVM's off-heap use and the Python workers — a 16g heap on a 15 GB
+    host grows until the kernel kills the JVM."""
+    if limit_bytes is None:
+        return "16g"
+    mb = limit_bytes // 2 // 2**20
+    return f"{max(1024, min(mb, 16384))}m"
+
+
 # Applied at build time (before JVM start) when we own the session.
 _BUILD_CONF = {
     # AQE: runtime re-planning — coalesce small shuffle partitions, convert
@@ -36,7 +76,8 @@ _BUILD_CONF = {
     # Arrow for any pandas-UDF path (the slow-path escape hatch).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.ui.enabled": "false",
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    or default_driver_memory(_memory_limit_bytes()),
 }
 
 # Runtime-settable conf (safe to apply to a session we did not build,
@@ -72,12 +113,15 @@ def spread_partition_count(spark: SparkSession) -> int:
     defaultParallelism makes partition SIZE scale with data/cores — a
     spill hazard at 100 TB.  Production sizes shuffle.partitions for
     the data (guide §2.2), and this count follows it; locally both are
-    the core count, so the plan is unchanged from the pinned form.
+    the core count, so the plan is unchanged from the pinned form. A
+    non-numeric setting (some platforms accept "auto") falls back to
+    defaultParallelism.
     """
-    return max(
-        spark.sparkContext.defaultParallelism,
-        int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
-    )
+    try:
+        configured = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    except ValueError:  # a non-numeric setting such as "auto"
+        configured = 0
+    return max(spark.sparkContext.defaultParallelism, configured)
 
 
 def get_spark(

@@ -1,7 +1,6 @@
 """Replay the reference's ArrayTest against the engine — the FOURTH
 reference test file harvested into the comparator family (r10 verdict
-queue #3 second half; see scripts/correlated_subquery_probe.py,
-scripts/reference_fixture_probe.py, scripts/string_functions_probe.py).
+queue #3 second half; see scripts/correlated_subquery_probe.py).
 
 Tests/ArrayTest.cpp asserts through typed C++ row loops with INLINE
 expected vectors, so each test transcribes (file:line cited) to

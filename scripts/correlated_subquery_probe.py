@@ -1,8 +1,7 @@
 """Replay the reference's CorrelatedSubqueryTest against the engine —
 the THIRD reference test file harvested into the comparator family
-(r10 verdict queue #3; ExecuteTest/TopKTest are covered by
-scripts/reference_fixture_probe.py, StringFunctionsTest by
-scripts/string_functions_probe.py).
+(r10 verdict queue #3; the StringFunctionsTest findings are pinned
+in tests/test_stringops_parity.py).
 
 Tests/CorrelatedSubqueryTest.cpp asserts through C++ loops over
 deterministic fixtures rather than inline expected blocks, so this

@@ -1,11 +1,11 @@
 """Replay the reference's CtasUpdateTest against the engine — the
 SIXTH reference test file harvested into the comparator family (r12
-verdict queue #2; ExecuteTest/TopKTest live in
-scripts/reference_fixture_probe.py, StringFunctionsTest in
-scripts/string_functions_probe.py, CorrelatedSubqueryTest in
+verdict queue #2; CorrelatedSubqueryTest lives in
 scripts/correlated_subquery_probe.py, ArrayTest in
-scripts/array_test_probe.py, the constants suites in
-scripts/constant_assertions_probe.py).
+scripts/array_test_probe.py; the ExecuteTest/TopKTest,
+StringFunctionsTest and constants-suite findings are pinned in
+tests/test_stringops_parity.py, tests/test_geo_math_parity.py and
+the other parity tests).
 
 Tests/CtasUpdateTest.cpp (3,973 lines) drives CTAS / ITAS / UPDATE
 ingestion through per-type TestColumnDescriptor value generators and

@@ -1,6 +1,6 @@
-"""r11 GeoSpatial.Math parity pins — the classes the repo-wide
-constant-assertion comparator (scripts/constant_assertions_probe.py)
-surfaced, each pinned with the reference's own expected values.
+"""r11 GeoSpatial.Math parity pins — the classes a repo-wide replay of
+the reference tests' constant assertions surfaced, each pinned with
+the reference's own expected values.
 
 References: Tests/GeospatialTest.cpp GeoSpatial.Math (expectations
 quoted per test), QueryEngine/ExtensionFunctionsGeo.hpp (the

@@ -4,6 +4,8 @@ helpers, generate_series edge cases, Arrow surface."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -1677,6 +1679,39 @@ def test_render_hex_pixel_bins(spark):
     assert sp["p"] == (int(sp["x"] * 4) & 0x7FFF) | ((int(sp["y"] * 4) & 0x7FFF) << 16)
 
 
+@pytest.mark.parametrize("orient", ["horiz", "vert"])
+def test_render_hex_staged_xy_matches_single_axis(spark, orient):
+    """reg_hex_pixel_bin_xy_staged_sql: the staged (x, y) pair equals
+    the single-axis Column forms for both orientations (to rounding:
+    SQL text reads the decimal literals as DECIMAL)."""
+    from pyspark.sql import functions as F
+
+    from heavydb_spark.functions import render
+
+    hexw, hexh = 10.0 * render.SQRT3 / 2.0, 10.0
+    if orient == "vert":
+        hexw, hexh = hexh, hexw
+    bounds = (0.0, 100.0, 0.0, 100.0)
+    tail = (hexw, hexh, 3.0, 2.0, 100, 100)
+    pts = [(x + 0.37, y + 0.91) for x in range(0, 100, 7)
+           for y in range(0, 100, 11)]
+    df = spark.createDataFrame(pts, "px double, py double")
+    stages, x_sql, y_sql = render.reg_hex_pixel_bin_xy_staged_sql(
+        orient, "px", *bounds[:2], "py", *bounds[2:], *tail)
+    for name, sql in stages:
+        df = df.withColumn(name, F.expr(sql))
+    fx = getattr(render, f"reg_hex_{orient}_pixel_bin_x")
+    fy = getattr(render, f"reg_hex_{orient}_pixel_bin_y")
+    col_args = (F.col("px"), *bounds[:2], F.col("py"), *bounds[2:], *tail)
+    rows = df.select(
+        F.expr(x_sql).alias("sx"), F.expr(y_sql).alias("sy"),
+        fx(*col_args).alias("x"), fy(*col_args).alias("y"),
+    ).collect()
+    assert len(rows) == len(pts)
+    for r in rows:
+        assert (r["sx"], r["sy"]) == pytest.approx((r["x"], r["y"]))
+
+
 def test_render_merc_view_functions(spark):
     """is_point[_size]_in_merc_view + convert_meters_to_merc_pixel_*
     (ExtensionFunctions.hpp:1060-1135): rect containment, radius
@@ -2145,6 +2180,44 @@ def test_remove_boilerplate_segments_semantics(spark):
         6: ("g", 1, 2),
         7: ("e f z", 3, 0),
     }
+
+
+def test_remove_boilerplate_segments_large_set_not_broadcast(spark):
+    """The boilerplate set carries no broadcast hint: when broadcasts
+    are off (as for a set too large to broadcast) the anti join runs as
+    a sort-merge join and the result is unchanged."""
+    from heavydb_spark.operators.dedup import remove_boilerplate_segments
+
+    # 500 two-token segments, each in 3 distinct docs, plus one unique
+    # tail segment per doc
+    rows = [
+        (d, " ".join(f"b{k} c{k}" for k in range(d % 10, 500, 10))
+         + f" u{d} v{d}")
+        for d in range(30)
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    keys = ("spark.sql.autoBroadcastJoinThreshold",
+            "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        for k in keys:
+            spark.conf.set(k, "-1")
+        out = remove_boilerplate_segments(
+            df, "doc_id", "text", seg=2, min_docs=3)
+        got = {
+            r.doc_id: (r.clean_text, r.n_tokens, r.n_removed_segments)
+            for r in out.collect()
+        }
+        plan = out._jdf.queryExecution().executedPlan().toString()
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert got == {d: (f"u{d} v{d}", 2, 50) for d in range(30)}
+    assert "BroadcastHashJoin" not in plan
+    assert re.search(r"SortMergeJoin \[seg#\d+\], \[seg#\d+\], LeftAnti", plan)
 
 
 def test_epoch_oversample_semantics(spark):
